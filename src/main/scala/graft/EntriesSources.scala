@@ -249,26 +249,24 @@ private[graft] object EntriesSources {
   /** S15 — orphan-file audit: files present under the dataset root but
     * absent from the bookmark manifest (crashed-run leftovers, manual
     * drops, partial commits — the reconciliation every incremental
-    * pipeline needs before it can trust its bookmark). Listing
-    * anti-join manifest, grouped per partition; only the uncommitted
-    * partitions may surface. Fixture commits exactly the `< 'm'`
-    * partitions' files, so the oracle knows the orphan census by
+    * pipeline needs before it can trust its bookmark). The orphans are
+    * exactly the bookmark's new-file delta, grouped per partition; only
+    * the uncommitted partitions may surface. Fixture commits exactly the
+    * `< 'm'` partitions' files, so the oracle knows the orphan census by
     * construction.
     */
   val s15Orphans = Q(
     (s, dir) => {
+      import s.implicits._
       val tmp = scratchPath("graft_s15").toString
       val ev = t(s, dir, "events").select(col("event_id"), col("event_type"))
       ParquetDataset.write(ev, s"$tmp/data", Seq("event_type"))
-      val listed = FileListing.list(s, s"$tmp/data")
-        .where(col("path").endsWith(".parquet"))
-      Bookmark.commitFilesDF(s, s"$tmp/manifest",
-        listed.where(
-          regexp_extract(col("path"), "event_type=([^/]+)", 1) < "m")
-          .select(col("path")))
-      listed.join(
-          s.read.parquet(s"$tmp/manifest").select(col("path")),
-          Seq("path"), "left_anti")
+      def partition(p: String) = "event_type=([^/]+)".r
+        .findFirstMatchIn(p).fold("")(_.group(1))
+      Bookmark.commitFiles(s, s"$tmp/manifest",
+        Bookmark.newFiles(s, s"$tmp/data", s"$tmp/manifest")
+          .filter(partition(_) < "m"))
+      Bookmark.newFiles(s, s"$tmp/data", s"$tmp/manifest").toDF("path")
         .withColumn("event_type",
           regexp_extract(col("path"), "event_type=([^/]+)", 1))
         .groupBy(col("event_type")).agg(count(lit(1)).as("n_orphans"))
@@ -559,21 +557,22 @@ private[graft] object EntriesSources {
       attrs = Seq("event_type")),
     Some("WITH o AS (SELECT user_id, event_id, event_type, lag(event_id) OVER w AS pid, lag(event_type) OVER w AS ptype FROM events WINDOW w AS (PARTITION BY user_id ORDER BY event_id)), st AS (SELECT user_id, event_id, event_type FROM o WHERE pid IS NULL OR ptype IS DISTINCT FROM event_type) SELECT user_id, event_type, event_id AS valid_from, lead(event_id) OVER w2 AS valid_to, lead(event_id) OVER w2 IS NULL AS is_current FROM st WINDOW w2 AS (PARTITION BY user_id ORDER BY event_id)"))
 
-  /** §2.8 — incremental bookmark: after batch 1 is committed to the
-    * manifest, a second run sees only batch 2's files (the Glue
-    * job-bookmark semantics as a manifest + anti-join on
-    * input_file_name()).
+  /** §2.8 — incremental bookmark: after batch 1's files are committed
+    * to the manifest, a second run lists only batch 2's files and reads
+    * exactly those (the Glue job-bookmark semantics as a processed-file
+    * manifest).
     */
   val bmIncremental = Q(
     (s, dir) => {
       val tmp = scratchPath("graft_bm").toString
+      val (data, manifest) = (s"$tmp/data", s"$tmp/manifest")
       val ev = t(s, dir, "events").select(col("event_id"), col("event_type"))
       ev.filter(col("event_id") % 2 === 0)
-        .write.mode("append").parquet(s"$tmp/data")
-      Bookmark.commit(s, s"$tmp/data", s"$tmp/manifest")
+        .write.mode("append").parquet(data)
+      Bookmark.commitFiles(s, manifest, Bookmark.newFiles(s, data, manifest))
       ev.filter(col("event_id") % 2 =!= 0)
-        .write.mode("append").parquet(s"$tmp/data")
-      Bookmark.newData(s, s"$tmp/data", s"$tmp/manifest")
+        .write.mode("append").parquet(data)
+      s.read.parquet(Bookmark.newFiles(s, data, manifest): _*)
     },
     Some("SELECT event_id, event_type FROM events WHERE event_id % 2 <> 0"))
 

@@ -791,17 +791,20 @@ object ScaleStress {
     }
     val effectOps: Seq[(String, Int => (() => Unit, () => Long))] = Seq(
       "ann_write_hot_cluster" -> (f => {
-        // HOT-CLUSTER write-path rung (r21): half the corpus lands in
-        // ONE cluster, the rest spreads over 10·f replica-qualified
-        // clusters. Ann.sizedByCluster's REBALANCE(cluster) hint must
-        // skew-SPLIT the hot cluster across tasks (the reason it was
-        // chosen over repartition(cluster), which would serialize the
-        // hot cluster through one task and bend this rung
-        // superlinear). The fixture's bytes are far below the
-        // production advisory target, so the rung scales the advisory
-        // down (setup, untimed; restored after the census) to make
-        // the splitter exercise at fixture scale; the census prints
-        // the hot cluster's file count — >1 IS the skew-split proof.
+        // HOT-CLUSTER write-path rung (r21): half the corpus (even
+        // vec_ids) lands in ONE cluster; odd vec_ids have only odd
+        // residues mod 10, so the rest spreads over 5·f
+        // replica-qualified clusters ({2,4,6,8,10} + 10·replica).
+        // Ann.sizedByCluster's REBALANCE(cluster) hint must skew-SPLIT
+        // the hot cluster across tasks (the reason it was chosen over
+        // repartition(cluster), which would serialize the hot cluster
+        // through one task and bend this rung superlinear). The
+        // fixture's bytes are far below the production advisory
+        // target, so the rung scales the advisory down (setup,
+        // untimed; restored in a finally around the write, so a
+        // throwing write cannot leak it into later rungs) to make the
+        // splitter exercise at fixture scale; the census prints the
+        // hot cluster's file count — >1 IS the skew-split proof.
         val dir = s"$workDir/f$f/hotwrite"
         val adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         val advPrev = spark.conf.get(adv)
@@ -812,10 +815,11 @@ object ScaleStress {
               .as("cl"))
           .localCheckpoint()
         spark.conf.set(adv, "262144") // 256 KB: hot cluster >> advisory
-        (() => graft.ann.Ann.sizedByCluster(skewed, "cl")
-            .write.mode("overwrite").partitionBy("cl").parquet(dir),
+        (() =>
+            try graft.ann.Ann.sizedByCluster(skewed, "cl")
+              .write.mode("overwrite").partitionBy("cl").parquet(dir)
+            finally spark.conf.set(adv, advPrev),
           () => {
-            spark.conf.set(adv, advPrev)
             val hotFiles = Option(new java.io.File(s"$dir/cl=0")
               .listFiles((_, n) => n.endsWith(".parquet")))
               .fold(0)(_.length)

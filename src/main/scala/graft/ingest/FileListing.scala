@@ -12,8 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object FileListing {
 
-  def list(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
+  /** Every file under `root` as (scheme-qualified path, length), held on
+    * the driver; empty when `root` does not exist.
+    */
+  def files(spark: SparkSession, root: String): Seq[(String, Long)] = {
     val path = new Path(root)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rows = Seq.newBuilder[(String, Long)]
@@ -24,6 +26,11 @@ object FileListing {
         rows += ((f.getPath.toString, f.getLen))
       }
     }
-    rows.result().toDF("path", "length")
+    rows.result()
+  }
+
+  def list(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    files(spark, root).toDF("path", "length")
   }
 }

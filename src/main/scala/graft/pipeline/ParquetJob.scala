@@ -16,7 +16,9 @@ import graft.streaming.Bookmark
   *  - relationalize carries the partition columns into children directly
   *    (R2) instead of a distinct+join per child
   *  - incremental state is an explicit file manifest (Bookmark) instead of
-  *    an opaque Glue job bookmark; reset = delete the manifest
+  *    an opaque Glue job bookmark: a run lists the files not yet in the
+  *    manifest, reads exactly those, and commits exactly those; reset =
+  *    delete the manifest
   *  - the per-dataset fan-out is a plain loop/Par collection over dataset
   *    names in one SparkSession instead of one Glue job per table
   */
@@ -30,18 +32,20 @@ object ParquetJob {
   val CarryCols: Seq[String] =
     Seq("recordid", "assessmentid", "year", "month", "day")
 
-  /** Run one dataset: read new NDJSON files (bookmark-filtered) with the
-    * declared schema, relationalize if nested, append every produced
-    * table to its partitioned Parquet dataset, then advance the bookmark.
-    * Returns per-table appended row counts.
+  /** Run one dataset: read exactly its new NDJSON files (the bookmark's
+    * [[Bookmark.newFiles]]) with the declared schema, relationalize if
+    * nested, append every produced table to its partitioned Parquet
+    * dataset, then commit exactly those files. With no new files it
+    * returns before any JSON is read. Returns per-table appended row
+    * counts.
     *
     * @param outName output table name + bookmark identity when it differs
     *                from the source dataset — the schema-versioning case
     *                ([[SchemaEvolution]]): a `docs_v2` table draining the
     *                `docs_v1` JSON layout under its own manifest
-    * @param newFiles pre-computed new-file list (Bookmark.newFiles) to
-    *                pin the exact batch, e.g. the files schema inference
-    *                just examined; None re-derives from the manifest
+    * @param newFiles the batch when the caller already holds it
+    *                ([[Bookmark.newFiles]]), e.g. the files schema
+    *                inference just examined; None lists it here
     */
   def run(
       spark: SparkSession,
@@ -55,9 +59,10 @@ object ParquetJob {
     val table = outName.getOrElse(dataset)
     val dataPath = s"$jsonRoot/dataset=$dataset"
     val manifestPath = s"$manifestRoot/$table"
-    val raw = JsonDataset.read(spark, jsonRoot, dataset, spec.schema)
-    val fresh = Bookmark.newDataFrom(spark, raw, dataPath, manifestPath, newFiles)
-    if (fresh.isEmpty) return Result(Map.empty)
+    val files = newFiles.getOrElse(Bookmark.newFiles(spark, dataPath, manifestPath))
+    if (files.isEmpty) return Result(Map.empty)
+    val fresh = spark.read.option("basePath", dataPath).schema(spec.schema)
+      .json(files: _*)
 
     val tables: Map[String, DataFrame] =
       if (Relationalize.hasNestedFields(fresh.schema))
@@ -82,10 +87,7 @@ object ParquetJob {
       // empty map — that absence IS the zero count
       name -> obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
     }
-    newFiles match {
-      case Some(ps) => Bookmark.commitFiles(spark, manifestPath, ps)
-      case None => Bookmark.commit(spark, dataPath, manifestPath)
-    }
+    Bookmark.commitFiles(spark, manifestPath, files)
     Result(counts)
   }
 }

@@ -1,158 +1,98 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 
 import graft.ingest.FileListing
 
-/** §2.8 — Glue-job-bookmark equivalent: a processed-file manifest plus a
-  * `left_anti` join on `input_file_name()`, so each run processes only
-  * files that appeared since the last commit
+/** §2.8 — Glue-job-bookmark equivalent: a processed-file manifest. A run
+  * lists the data files not yet in the manifest ([[newFiles]]), reads
+  * exactly those, and then records exactly those ([[commitFiles]]), so
+  * each file is processed once and a file landing mid-run waits for the
+  * next run instead of being marked processed unread
   * (templates/study-pipeline-infra.j2:125 enables bookmarks per job;
   * docs/schema_change_protocol.md:31-33 documents the reset procedure —
   * here a reset is just deleting the manifest).
   *
   * Scale design: the manifest holds one row per data FILE (not per
   * record), so even a petabyte dataset yields a manifest of at most a few
-  * million short strings — always broadcastable; the anti-join therefore
-  * never shuffles the data being scanned.
+  * million short strings. The listing is driver-held anyway (one
+  * `FileStatus` per file from the Hadoop client), so the delta is a
+  * driver-side set difference, capped by [[DefaultNewFilesBudget]].
   */
 object Bookmark {
 
-  /** Normalize `file:`-style URIs from input_file_name() and Hadoop
-    * listings to a comparable plain path. Shared by every consumer that
-    * compares listings to manifests — a second normalizer that drifts
-    * from this one silently desynchronizes new-file detection.
+  /** Manifest identity of a path: the scheme and authority are stripped,
+    * so `file:/a/b`, `file:///a/b` and `/a/b` record alike (and
+    * `s3a://bucket/k` as `/bucket/k`). Only the manifest holds this
+    * form; files are always read by their listed, qualified path.
     */
-  private[graft] def normalize(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z0-9+.-]+:/+", "/")
-
-  /** Normalized listing of `dataPath`'s DATA files (Glue-style hidden
-    * files — leading `_`/`.` — are never data), as a (path) DataFrame.
-    */
-  def listDataFiles(spark: SparkSession, dataPath: String): DataFrame =
-    FileListing.list(spark, dataPath)
-      .where(!col("path").rlike("/[_.][^/]*$"))
-      .select(normalize(col("path")).as("path"))
+  private[graft] def normalize(path: String): String =
+    path.replaceFirst("^[a-zA-Z0-9+.-]+:/+", "/")
 
   def manifestExists(spark: SparkSession, manifestPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath)
+    val p = new Path(manifestPath)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Default cap on how many new-file paths [[newFiles]] may pull to the
-    * driver. One million short strings is ~100 MB of driver heap — past
-    * that the delta should stay distributed ([[newFilesDF]]) or the run
-    * split, not silently balloon driver state.
+  /** Default cap on how many new-file paths [[newFiles]] may return. One
+    * million short strings is ~100 MB of driver heap — past that the run
+    * should be split, not silently balloon driver state.
     */
   val DefaultNewFilesBudget = 1000000
 
-  /** DISTRIBUTED new-file delta: normalized paths of data files not yet
-    * in the manifest, as a (path) DataFrame — never collects, so it
-    * scales to manifests of any size. The anti-join is file-sized on
-    * both sides; the planner (AQE) picks the join strategy from runtime
-    * stats.
+  /** Normalized paths already recorded as processed. The schema is
+    * declared, so the read skips Parquet's footer-inference job.
     */
-  def newFilesDF(
-      spark: SparkSession, dataPath: String, manifestPath: String): DataFrame = {
-    val listed = listDataFiles(spark, dataPath)
-    if (!manifestExists(spark, manifestPath)) listed
-    else listed.join(
-      spark.read.parquet(manifestPath).select("path"), Seq("path"), "left_anti")
+  private def committed(spark: SparkSession, manifestPath: String): Seq[String] = {
+    import spark.implicits._
+    if (!manifestExists(spark, manifestPath)) Nil
+    else spark.read.schema("path STRING").parquet(manifestPath)
+      .as[String].collect().toSeq
   }
 
-  /** Driver-held new-file delta, sorted for deterministic downstream
-    * use. FAILS FAST when the delta exceeds `maxFiles`
-    * ([[DefaultNewFilesBudget]]) — a delta past the budget means the
-    * driver-list pattern is mis-sized for the dataset; process the delta
-    * distributedly ([[newFilesDF]]/[[newDataFrom]]) or raise the budget
-    * deliberately. The check reads at most `maxFiles + 1` rows, never
-    * the full oversized delta.
+  /** Data files under `dataPath` not yet in the manifest, by their
+    * listed (scheme-qualified) path, sorted. Hidden entries below
+    * `dataPath` — a leading `.`, or a leading `_` outside a `k=v`
+    * partition directory, as Spark's file index skips them — are never
+    * data: `_SUCCESS`, checksums, an in-flight `_temporary` tree. With
+    * no manifest yet, every data file is new. FAILS FAST when the delta
+    * exceeds `maxFiles` ([[DefaultNewFilesBudget]]) — split the run or
+    * raise the budget deliberately.
     */
   def newFiles(
       spark: SparkSession, dataPath: String, manifestPath: String,
       maxFiles: Int = DefaultNewFilesBudget): Seq[String] = {
     require(maxFiles > 0 && maxFiles < Int.MaxValue,
       s"maxFiles must be in (0, ${Int.MaxValue}), got $maxFiles")
-    val rows = newFilesDF(spark, dataPath, manifestPath)
-      .limit(maxFiles + 1).collect()
-    if (rows.length > maxFiles) throw new IllegalStateException(
+    val root = new Path(dataPath)
+    val prefix = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toString.stripSuffix("/") + "/"
+    def hidden(name: String) =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    val done = committed(spark, manifestPath).toSet
+    val fresh = FileListing.files(spark, dataPath).iterator.map(_._1)
+      .filter(p => !p.stripPrefix(prefix).split('/').exists(hidden) &&
+        !done(normalize(p)))
+      .take(maxFiles + 1).toVector
+    if (fresh.length > maxFiles) throw new IllegalStateException(
       s"bookmark: more than $maxFiles new files under $dataPath — the " +
-        "driver-held file list would exceed its budget. Use newFilesDF/" +
-        "newDataFrom to keep the delta distributed, or raise maxFiles.")
-    rows.map(_.getString(0)).sorted.toSeq
+        "driver-held file list would exceed its budget. Split the run or " +
+        "raise maxFiles.")
+    fresh.sorted
   }
 
-  /** Record the current file set of `dataPath` as processed. Overwrites —
-    * the manifest is always the full listing, which makes commit
-    * idempotent and crash-safe (a re-run after failure re-lists).
-    */
-  def commit(spark: SparkSession, dataPath: String, manifestPath: String): Unit =
-    listDataFiles(spark, dataPath)
-      .write.mode("overwrite").parquet(manifestPath)
-
-  /** Record exactly `paths` (plus everything already committed) as
-    * processed — the commit for a PINNED batch: a full-listing commit
-    * after a pinned run would mark files that landed mid-run as
-    * processed without them ever being converted.
+  /** Record `paths` (plus everything already committed) as processed:
+    * the manifest is overwritten with (manifest ∪ paths), normalized, as
+    * one small file. Commit exactly the files the run read — a
+    * re-listing would mark files that landed mid-run as processed
+    * without them ever being converted.
     */
   def commitFiles(
       spark: SparkSession, manifestPath: String, paths: Seq[String]): Unit = {
     import spark.implicits._
-    commitFilesDF(spark, manifestPath, paths.toDF("path"))
+    (committed(spark, manifestPath) ++ paths.map(normalize)).distinct
+      .toDF("path").coalesce(1)
+      .write.mode("overwrite").parquet(manifestPath)
   }
-
-  /** DISTRIBUTED pinned commit: union the previous manifest with `paths`
-    * (a (path) DataFrame) and overwrite, without ever pulling the
-    * manifest to the driver. Reading and overwriting the same parquet
-    * path in one lazy plan would race the overwrite with the scan, so
-    * the union is materialized first (`localCheckpoint` — executor
-    * block storage, still distributed) to cut the scan dependency.
-    */
-  def commitFilesDF(
-      spark: SparkSession, manifestPath: String, paths: DataFrame): Unit = {
-    val prev =
-      if (!manifestExists(spark, manifestPath)) None
-      else Some(spark.read.parquet(manifestPath).select("path"))
-    val all = prev.fold(paths.select("path"))(
-        _.unionByName(paths.select("path")))
-      .distinct()
-      .localCheckpoint()
-    try all.write.mode("overwrite").parquet(manifestPath)
-    finally all.unpersist()
-  }
-
-  /** Keep only rows of `df` coming from files of `dataPath` NOT yet in
-    * the manifest. With no manifest yet, everything is new (first run).
-    * Works for any file-based source (`df` must originate from a scan so
-    * input_file_name() is populated).
-    *
-    * @param pinnedFiles when the caller already holds the new-file list
-    *   (e.g. [[newFiles]] computed for schema inference), pass it to pin
-    *   the exact set — no re-listing, and no window for a file landing
-    *   between two listings to slip through unexamined
-    */
-  def newDataFrom(
-      spark: SparkSession, df: DataFrame,
-      dataPath: String, manifestPath: String,
-      pinnedFiles: Option[Seq[String]] = None): DataFrame = {
-    import spark.implicits._
-    val withFile = df.withColumn("__file", normalize(input_file_name()))
-    val out = pinnedFiles match {
-      case Some(paths) =>
-        withFile.join(
-          broadcast(paths.toDF("path")),
-          withFile("__file") === col("path"), "left_semi")
-      case None if !manifestExists(spark, manifestPath) => withFile
-      case None =>
-        withFile.join(
-          broadcast(spark.read.parquet(manifestPath)),
-          withFile("__file") === col("path"), "left_anti")
-    }
-    out.drop("__file")
-  }
-
-  /** Parquet-dataset convenience wrapper over newDataFrom. */
-  def newData(spark: SparkSession, dataPath: String, manifestPath: String): DataFrame =
-    newDataFrom(spark, spark.read.parquet(dataPath), dataPath, manifestPath)
 }

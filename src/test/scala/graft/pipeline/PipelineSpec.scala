@@ -1,21 +1,49 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.ingest.{IngestJob, RawRecord, Router}
+import graft.ingest.{FileListing, IngestJob, RawRecord, Router}
 import graft.schema.TableCatalog
 import graft.sources.ParquetDataset
+import graft.streaming.Bookmark
 import graft.validate.{ArchiveMap, SchemaCache}
 
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Stage-2 orchestration (E2) + bootstrap driver (E3) over the reference
-  * fixture flow.
+import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.zip.{ZipEntry, ZipOutputStream}
+
+/** Stage-2 orchestration (E2) + bootstrap driver (E3) over a Bridge-like
+  * spelling archive.
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  private val fixtureZip =
-    "/root/reference/tests/data/OCJByUtSrVTYtqObYp7XZV_J-mtbSpelling.zip"
+  /** A legacy-mapped spelling archive (assessment revision 4, so routing
+    * needs no JSON Schema): nested `taskData.json` with array fields
+    * (→ child tables) and a struct-only `weather.json`.
+    */
+  private val archive: Array[Byte] = {
+    val members = Seq(
+      "taskData.json" -> ("""{"taskrunuuid":"t1","type":"spelling",""" +
+        """"steps":[{"identifier":"s1","score":1},{"identifier":"s2",""" +
+        """"score":0}],"taskstatus":["completed"]}"""),
+      "weather.json" -> ("""{"type":"weather","identifier":"w1",""" +
+        """"weather":{"temperature":12.5,"wind":{"speed":3.0}}}"""))
+    val bytes = new ByteArrayOutputStream()
+    val zip = new ZipOutputStream(bytes)
+    members.foreach { case (name, json) =>
+      zip.putNextEntry(new ZipEntry(name))
+      zip.write(json.getBytes(UTF_8))
+      zip.closeEntry()
+    }
+    zip.close()
+    bytes.toByteArray
+  }
 
   private def record(rid: String) = RawRecord(
     metadata = Map(
@@ -24,7 +52,45 @@ class PipelineSpec extends SparkSpec {
       "assessmentrevision" -> "4",
       "uploadedon" -> "2022-02-15T20:47:36.270Z",
       "clientinfo" -> "{osName:'iOS'}"),
-    zipBytes = Files.readAllBytes(Paths.get(fixtureZip)))
+    zipBytes = archive)
+
+  /** Runs `body`, then returns, with its result, the input files of every
+    * JSON scan the queries it executed ran.
+    */
+  private def jsonScans[T](body: => T): (T, Seq[String]) = {
+    val files = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.fileFormat.isInstanceOf[JsonFileFormat] =>
+            s.relation.location.inputFiles.toSeq
+        }.flatten.foreach(files.add)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      drainListenerBus()
+      (r, files.toArray(Array.empty[String]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  // QueryExecutionListener callbacks ride the async listener bus; drain it
+  // deterministically (a fixed sleep can green-light a regression on a
+  // loaded machine). LiveListenerBus.waitUntilEmpty is private[spark] —
+  // bytecode-public, reached via reflection.
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    val m = bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
+      .get
+    if (m.getParameterCount == 0) m.invoke(bus)
+    else m.invoke(bus, java.lang.Long.valueOf(30000L))
+  }
 
   private def cfg = IngestJob.Config(
     archiveMap = ArchiveMap(Nil, Nil, Nil),
@@ -55,19 +121,6 @@ class PipelineSpec extends SparkSpec {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    // QueryExecutionListener callbacks ride the async listener bus; drain
-    // it deterministically (a fixed sleep can green-light the regression
-    // on a loaded machine). LiveListenerBus.waitUntilEmpty is
-    // private[spark] — bytecode-public, reached via reflection.
-    def drainListenerBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m = bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
-        .get
-      if (m.getParameterCount == 0) m.invoke(bus)
-      else m.invoke(bus, java.lang.Long.valueOf(30000L))
-    }
     spark.listenerManager.register(listener)
     val first =
       try {
@@ -95,13 +148,68 @@ class PipelineSpec extends SparkSpec {
     // rerun without new data: bookmark filters everything
     assert(runJob().tables.isEmpty)
 
-    // second record arrives → only it is processed and appended
+    // second record arrives → only it is processed and appended, and the
+    // run's JSON scans read only its files, never the converted history
+    val weatherJson = s"$jsonRoot/dataset=WeatherResult_v1"
+    def listed() = FileListing.files(spark, weatherJson).map(_._1)
+      .filter(p => !p.split('/').last.matches("[_.].*")).toSet
+    val history = listed()
     IngestJob.run(spark, spark.createDataset(Seq(record("rec2"))), cfg,
       jsonRoot, s"$tmp/quarantine")
-    val second = runJob()
+    val rec2Files = listed() -- history
+    assert(rec2Files.nonEmpty)
+    val (second, scanned) = jsonScans(runJob())
     assert(second.tables("WeatherResult_v1") == 1)
+    assert(scanned.nonEmpty)
+    assert(scanned.map(Bookmark.normalize).toSet ==
+      rec2Files.map(Bookmark.normalize),
+      s"second run scanned $scanned, new files are $rec2Files")
     val all = ParquetDataset.read(spark, s"$tmp/parquet/WeatherResult_v1")
     assert(all.select("recordid").distinct().count() == 2)
+  }
+
+  test("a file landing mid-run is left for the next run, not committed " +
+      "unread") {
+    import org.apache.spark.sql.functions.lit
+    import graft.schema.{ColumnSpec, TableSpec}
+    val tmp = graft.EntryKit.scratchTracked("graft_race").toString
+    val jsonRoot = s"$tmp/json"
+    val batch = Seq((1L, "r1"), (2L, "r2")).toDF("doc_id", "recordid")
+      .withColumn("assessmentid", lit("a")).withColumn("year", lit(2023))
+      .withColumn("month", lit(1)).withColumn("day", lit(15))
+    graft.sources.JsonDataset.write(batch, jsonRoot, "docs")
+    val spec = TableSpec("docs", Seq(
+      ColumnSpec("doc_id", "bigint"), ColumnSpec("recordid", "string")), Nil)
+    def runJob() = ParquetJob.run(spark, jsonRoot, "docs", spec,
+      s"$tmp/parquet", s"$tmp/manifests")
+
+    // the late file lands as the first run's first Spark job starts
+    val late = Paths.get(
+      s"$jsonRoot/dataset=docs/assessmentid=a/year=2023/month=1/day=15/late.json")
+    val dropped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val dropper = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (dropped.compareAndSet(false, true))
+          Files.write(late, """{"doc_id":3,"recordid":"r3"}""".getBytes(UTF_8))
+    }
+    spark.sparkContext.addSparkListener(dropper)
+    val first =
+      try {
+        val r = runJob()
+        drainListenerBus()
+        r
+      } finally spark.sparkContext.removeSparkListener(dropper)
+    assert(dropped.get() && Files.exists(late))
+    assert(first.tables("docs") == 2)
+
+    // the next run converts it: no row is silently lost
+    val second = runJob()
+    assert(second.tables.get("docs").contains(1L),
+      s"the late file was not converted: $second")
+    assert(spark.read.parquet(s"$tmp/parquet/docs").select("doc_id")
+      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(runJob().tables.isEmpty)
   }
 
   test("schema evolution: incompatible change versions the dataset and " +
